@@ -1,8 +1,8 @@
 """Records the DuckDB oracle's result digest of each dedup query on each
 query-table variant, into query_oracle.json beside this file.
 
-The oracle SQL comes from the program: every dedup_queries run writes it to
-``.bench_work/dedup_queries-seed<n>-trace<t>/check/oracle_sql.json``. Run
+The oracle SQL comes from the program: every traced run writes it to
+``.bench_work/<workload>-seed<n>-trace1/check/oracle_sql.json``. Run
 again whenever a query's oracle SQL or the table generator changes:
 
     python3 perfbench/record_oracle.py <oracle_sql.json>

@@ -8,13 +8,15 @@ workload in one JVM on ``local[N]`` with N the usable cpus, checks every
 output, and prints two lines: a record with host facts and every measured
 value, then the result object (with ``--trace 0`` the end-to-end metrics
 of BENCHMARK.json, with ``--trace 1`` its per-layer metrics). Exits 1 when
-an output check fails, 2 when the program cannot be built or run.
+an output check fails, 2 when the program cannot be built or run or a
+metric was not measured.
 
 Everything it writes stays under ``.bench_work/`` and ``perfbench/target``.
 """
 import argparse
 import hashlib
 import json
+import math
 import os
 import shutil
 import subprocess
@@ -27,7 +29,8 @@ import gen  # noqa: E402
 
 # Input sizes: one job takes about 7 s (skewed) to 8 s (uniform) on 4 cores,
 # so a run of two set-ups (the first with a cold JVM) and a job stays under a
-# minute. Each input file draws from its own seed derived from --seed.
+# minute; traced runs, which also time the dedup queries, stay under two.
+# Each input file draws from its own seed derived from --seed.
 FEBRL_SEEDS = {"labeled": 1, "heldout": 2, "train": 3, "skewed": 4,
                "warm_labeled": 5, "warm_heldout": 6, "warm": 7}
 UNIFORM_RECORDS = 600
@@ -41,7 +44,6 @@ QUERY_DOCUMENTS = 500
 # record_oracle.py instead of being recomputed in every run.
 QUERY_VARIANTS = 8
 ORACLE_FILE = os.path.join(HERE, "query_oracle.json")
-SETUPS = 2
 JVM_DEADLINE_S = 170
 # The heap is fixed: with an adaptively sized one, job times fell into two
 # modes about 30% apart depending on how far G1 had grown the heap.
@@ -125,8 +127,8 @@ def make_inputs(workload, seed, data, trace):
         febrl("skewed", SKEWED_RECORDS, SKEW_ZIPF)
         febrl("train", 400, 0.0, first_id=1000000)
         febrl("warm", 120, SKEW_ZIPF, first_id=2000000)
-        if trace:
-            write_query_tables(os.path.join(data, "tables"), seed % QUERY_VARIANTS)
+    if trace:
+        write_query_tables(os.path.join(data, "tables"), seed % QUERY_VARIANTS)
 
 
 def write_query_tables(data, variant):
@@ -186,6 +188,10 @@ def query_checks(data, out, variant):
     return checks, seen
 
 
+def finite(v):
+    return isinstance(v, (int, float)) and not isinstance(v, bool) and math.isfinite(v)
+
+
 def meminfo_kb():
     with open("/proc/meminfo") as fh:
         for line in fh:
@@ -241,7 +247,7 @@ def main():
     cmd = (["java"] + JVM_OPTS + ["-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
            "-cp", classes + os.pathsep + os.path.join(jars, "*"), "perfbench.Main",
            "--workload", a.workload, "--data", data, "--work", work,
-           "--seconds", str(a.seconds), "--trace", str(a.trace), "--setups", str(SETUPS),
+           "--seconds", str(a.seconds), "--trace", str(a.trace),
            "--result", result_file, "--trace-file", trace_file])
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
                SPARK_LOCAL_DIRS=os.path.join(work, "spark-local"))
@@ -269,16 +275,11 @@ def main():
     attempted = res["jobs"] + len(checks)
     failed = len(failed_checks)
 
-    if a.trace:
-        names = spec["per_layer"]
-        values = res["layer"]
-        if values:
-            with open(trace_file) as fh:
-                trace = json.load(fh)
-    else:
-        names = spec["end_to_end"]
-        values = res["e2e"]
-    metrics = {m["name"]: {"value": values.get(m["name"], 0.0), "unit": m["unit"]} for m in names}
+    names, values = (spec["per_layer"], res["layer"]) if a.trace else (spec["end_to_end"], res["e2e"])
+    missing = [m["name"] for m in names if not finite(values.get(m["name"]))]
+    if missing:
+        fail("not measured: " + ", ".join(missing))
+    metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in names}
     host = {
         "cpus": cpus, "mem_total_kb": meminfo_kb(), "spark": res["spark_version"],
         "jdk": res["jdk"], "git_sha": git_sha(), "source_sha256": digest,
@@ -288,7 +289,9 @@ def main():
         "host": host, "end_to_end": res["e2e"], "detail": res["detail"],
         "failed_ops_frac": failed / float(attempted), "query_results": query_results,
         "checks": {n: (m or "ok") for n, m in checks}}
-    if a.trace and res["layer"]:
+    if a.trace:
+        with open(trace_file) as fh:
+            trace = json.load(fh)
         trace["host"] = host
         trace["record"] = record
         with open(trace_file, "w") as fh:

@@ -1,15 +1,16 @@
 package perfbench
 
 import java.io.{ByteArrayOutputStream, PrintStream}
+import java.nio.file.{Files, Paths}
 
 import graft.{CachedFrames, SparkEntry}
 import graft.cli.{ApplyDupClassifier, Cli, GenerateLabeledPoints, TrainDupClassifier}
-import graft.dedup.{BKV, DedupPipeline, DedupStrategy, DisDedupPlanner, TrianglePipeline}
+import graft.dedup.{BKV, DedupConfig, DedupPipeline, DedupStrategy, DisDedupPlanner, TrianglePipeline}
 import graft.ml.{DedupMl, Febrl}
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
-
-import scala.collection.mutable
 
 /** What a workload run needs besides the session: where its inputs are,
   * where it may write, how many reducers the triangle path gets. */
@@ -28,7 +29,8 @@ trait Workload {
   def setup(spark: SparkSession, env: Env): Unit
   /** One whole run; returns its phase timings in seconds (and counts). */
   def job(spark: SparkSession, env: Env): Map[String, Double]
-  /** Traced runs only: per-layer timings and counts. */
+  /** Traced runs only: per-layer timings and counts. Every workload
+    * reports every per-layer metric of BENCHMARK.json. */
   def probe(spark: SparkSession, env: Env): Map[String, Double]
   /** (check name, failure message or None). */
   def check(spark: SparkSession, env: Env): Seq[(String, Option[String])]
@@ -79,33 +81,79 @@ object Workloads {
       .write.mode("overwrite").csv(out)
   }
 
-  /** Febrl read, chooser statistic and the declarative pair layers, timed
-    * one by one; shared by both Febrl probes. */
+  /** True when `df` is the triangle path's plan: only that path scans an
+    * RDD (its pair generation), the declarative plan scans the CSV alone. */
+  def trianglePlan(df: DataFrame): Boolean =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.isDefined
+
+  /** Febrl read, the strategy chooser and the declarative pair layers,
+    * timed one by one. */
   def probeBlocking(spark: SparkSession, env: Env, input: String,
-      labeled: Boolean, pairFeatures: Boolean): (DataFrame, Map[String, Double]) = {
-    val cfg = if (labeled) Febrl.config else Febrl.config.copy(label = None)
+      cfg: DedupConfig): (DataFrame, Map[String, Double]) = {
     var df: DataFrame = null
     var records = 0L
     val readS = timed(env, "febrl.read") { df = Febrl.read(spark, input); records = df.count() }
     var share = 0.0
     val chooseS = timed(env, "strategy.choose") { share = DedupStrategy.maxBlockShare(df, cfg) }
+    // the path the chooser takes, read off the plan it returns
+    val chosen = trianglePlan(DedupStrategy.pairFeaturesAuto(df, cfg, k = env.cpus))
     var pairs = 0L
     val candS = timed(env, "pipeline.candidate_pairs") {
       pairs = force(DedupPipeline.candidatePairs(df, cfg))
     }
-    val out = mutable.Map(
+    val featS = timed(env, "pipeline.pair_features") { force(DedupPipeline.pairFeatures(df, cfg)) }
+    (df, Map(
       "febrl.read_s" -> readS, "febrl.records" -> records.toDouble,
       "strategy.choose_s" -> chooseS, "strategy.max_block_share" -> share,
-      "strategy.triangle_chosen" -> (if (share > 0.5) 1.0 else 0.0),
-      "pipeline.candidate_pairs_s" -> candS, "pipeline.candidate_pairs" -> pairs.toDouble)
-    if (pairFeatures) {
-      val featS = timed(env, "pipeline.pair_features") { force(DedupPipeline.pairFeatures(df, cfg)) }
-      out ++= Map(
-        "pipeline.pair_features_s" -> featS,
-        "comparators.feature_s" -> (featS - candS),
-        "comparators.pairs_per_s" -> pairs / (featS - candS))
+      "strategy.triangle_chosen" -> (if (chosen) 1.0 else 0.0),
+      "pipeline.candidate_pairs_s" -> candS, "pipeline.candidate_pairs" -> pairs.toDouble,
+      "pipeline.pair_features_s" -> featS,
+      "comparators.feature_s" -> (featS - candS),
+      "comparators.pairs_per_s" -> pairs / (featS - candS)))
+  }
+
+  /** The triangle path with k = cpus reducers, timed pair generation first
+    * and then with the features joined back, and the planner on the heavy
+    * blocks. The heavy blocks are the benchmark's own estimate: block
+    * sizes from the input CSV and TrianglePipeline's threshold
+    * tau = W / (3 k ln k), restated here; the reducer balance is measured
+    * from the pair-generation stage's tasks. Returns the features. */
+  def probeTriangle(env: Env, df: DataFrame, cfg: DedupConfig,
+      recs: IndexedSeq[Array[String]]): (DataFrame, Map[String, Double]) = {
+    val k = env.cpus
+    val pairsS = timed(env, "triangle.pairs") { force(TrianglePipeline.pairs(df, cfg, k)) }
+    val pairsSpan = env.tracer.last("triangle.pairs").get
+    val feats = TrianglePipeline.pairFeatures(df, cfg, k)
+    val featS = timed(env, "triangle.pair_features") { force(feats) }
+    val sizes = Checks.blockSizes(recs)
+    val total = sizes.values.map(n => n * (n - 1) / 2).sum
+    val tau = total / (3.0 * k * math.log(k))
+    val heavy = sizes.toSeq.filter { case (_, n) => n * (n - 1) / 2 > tau }
+      .map { case ((bk, v), n) => (BKV(bk, v), n) }
+    var plan: Map[BKV, IndexedSeq[Int]] = Map.empty
+    val assignS = timed(env, "planner.assign") {
+      plan = DisDedupPlanner.assign(heavy, k, totalWork = Some(total))
     }
-    (df, out.toMap)
+    val ki = heavy.sortBy(-_._2).headOption.map(h => plan(h._1).size).getOrElse(1)
+    env.tracer.flush()
+    val reducer = env.tracer.stagesIn(env.tracer.subtree(pairsSpan.id))
+      .maxByOption(_.readRecords.sum).map(st => SparkSummary.maxOverMean(st.readRecords.toSeq))
+    (feats, Map(
+      "triangle.pairs_s" -> pairsS, "triangle.pair_features_s" -> featS,
+      "triangle.join_back_s" -> (featS - pairsS),
+      "planner.assign_s" -> assignS, "planner.heavy_blocks" -> heavy.size.toDouble,
+      "planner.replication_factor" -> DisDedupPlanner.getL(ki).toDouble,
+      "planner.replication_bound" -> math.sqrt(2.0 * ki)) ++
+      reducer.map("triangle.reducer_records_max_over_mean" -> _))
+  }
+
+  /** The GBT fit and its evaluation on the 30% holdout. */
+  def probeTrain(env: Env, ml: DataFrame, maxIter: Int): (PipelineModel, Map[String, Double]) = {
+    val ((model, testDf), trainS) = seconds(env.tracer.span("ml.train")(DedupMl.train(ml, maxIter = maxIter)))
+    val evalS = timed(env, "ml.evaluate") { DedupMl.evaluate(model, testDf) }
+    val (total, test) = (ml.count(), testDf.count())
+    (model, Map("ml.train_s" -> trainS, "ml.evaluate_s" -> evalS,
+      "ml.train_rows" -> (total - test).toDouble, "ml.test_rows" -> test.toDouble))
   }
 
   /** Pair-file write and read-back plus the ML frame, timed one by one. */
@@ -126,7 +174,7 @@ object Workloads {
     } finally cached.unpersist()
   }
 
-  def scoreProbe(env: Env, model: org.apache.spark.ml.PipelineModel, ml: DataFrame): Map[String, Double] =
+  def scoreProbe(env: Env, model: PipelineModel, ml: DataFrame): Map[String, Double] =
     Map("ml.score_s" -> timed(env, "ml.score") { force(DedupMl.score(model, ml)) })
 }
 
@@ -180,14 +228,14 @@ final class FebrlUniform extends Workload {
     m + ("pairs_per_s" -> (wantL.count + wantU.count) / m("generate_s"))
   }
 
+  /** The triangle path, which the chooser does not take here, is timed on
+    * the same batch for comparison with the declarative plan. */
   def probe(spark: SparkSession, env: Env): Map[String, Double] = {
-    val (df, blocking) = probeBlocking(spark, env, s"${env.data}/labeled.csv",
-      labeled = true, pairFeatures = true)
+    val (df, blocking) = probeBlocking(spark, env, s"${env.data}/labeled.csv", Febrl.config)
+    val (_, triangle) = probeTriangle(env, df, Febrl.config, labeled)
     val (ml, files) = probeFiles(spark, env, DedupPipeline.pairFeatures(df, Febrl.config),
       labeled = true, env.dir("probe/pairs_labeled"))
-    val ((model, testDf), trainS) = seconds(env.tracer.span("ml.train")(DedupMl.train(ml, maxIter = FebrlUniform.MaxIter)))
-    val evalS = timed(env, "ml.evaluate") { DedupMl.evaluate(model, testDf) }
-    val (total, test) = (ml.count(), testDf.count())
+    val (model, train) = probeTrain(env, ml, FebrlUniform.MaxIter)
     val dfU = Febrl.read(spark, s"${env.data}/heldout.csv")
     val outU = env.dir("probe/pairs_heldout")
     writePairs(DedupPipeline.pairFeatures(dfU, Febrl.config.copy(label = None)), labeled = false, outU)
@@ -195,8 +243,7 @@ final class FebrlUniform extends Workload {
     mlU.count()
     val score = scoreProbe(env, model, mlU)
     Seq(ml, mlU).foreach(_.unpersist())
-    blocking ++ files ++ score ++ Map("ml.train_s" -> trainS, "ml.evaluate_s" -> evalS,
-      "ml.train_rows" -> (total - test).toDouble, "ml.test_rows" -> test.toDouble)
+    blocking ++ triangle ++ files ++ train ++ score ++ QuerySlice(spark, env)
   }
 
   def check(spark: SparkSession, env: Env): Seq[(String, Option[String])] = {
@@ -230,13 +277,12 @@ object FebrlUniform {
   * `SparkEntry.entry` runs it), written as the CLI writes pairs, then
   * scored by ApplyDupClassifier with a model trained during set-up.
   *
-  * Its probe also runs [[QuerySlice]]: the query library's layer (driver-side
-  * build work, CachedFrames) is timed in traced runs only, since a third
-  * workload with its own cold JVM set-up does not fit the run budget. */
+  * Its probe, like the uniform one, also runs [[QuerySlice]]: the query
+  * library's layer (driver-side build work, CachedFrames) is timed in
+  * traced runs only, since a third workload with its own cold JVM set-up
+  * does not fit the run budget. */
 final class FebrlSkewed extends Workload {
   import Workloads._
-
-  private var queriesKept = false
 
   private var recs: IndexedSeq[Array[String]] = _
   private var want: Checks.PairSet = _
@@ -276,46 +322,20 @@ final class FebrlSkewed extends Workload {
     Map("generate_s" -> gen, "apply_s" -> apply, "pairs_per_s" -> want.count / gen)
   }
 
+  /** The ML fit layer is timed on this workload's training batch, the
+    * pairs the last set-up fitted its model on. */
   def probe(spark: SparkSession, env: Env): Map[String, Double] = {
-    val (df, blocking) = probeBlocking(spark, env, s"${env.data}/skewed.csv",
-      labeled = false, pairFeatures = false)
     val cfg = Febrl.config.copy(label = None)
-    val k = env.cpus
-    val pairsS = timed(env, "triangle.pairs") { force(TrianglePipeline.pairs(df, cfg, k)) }
-    val pairsSpan = env.tracer.last("triangle.pairs")
-    val feats = TrianglePipeline.pairFeatures(df, cfg, k)
-    val featS = timed(env, "triangle.pair_features") { force(feats) }
-    // the planner on the same heavy blocks TrianglePipeline.pairs collects
-    val sizes = Checks.blockSizes(recs)
-    val total = sizes.values.map(n => n * (n - 1) / 2).sum
-    val tau = total / (3.0 * k * math.log(k))
-    val heavy = sizes.toSeq.filter { case (_, n) => n * (n - 1) / 2 > tau }
-      .map { case ((bk, v), n) => (BKV(bk, v), n) }
-    var plan: Map[BKV, IndexedSeq[Int]] = Map.empty
-    val assignS = timed(env, "planner.assign") {
-      plan = DisDedupPlanner.assign(heavy, k, totalWork = Some(total))
-    }
-    val ki = heavy.sortBy(-_._2).headOption.map(h => plan(h._1).size).getOrElse(1)
+    val (df, blocking) = probeBlocking(spark, env, s"${env.data}/skewed.csv", cfg)
+    val (feats, triangle) = probeTriangle(env, df, cfg, recs)
     val (ml, files) = probeFiles(spark, env, feats, labeled = false, env.dir("probe/pairs"))
-    val score = scoreProbe(env, org.apache.spark.ml.PipelineModel.load(model(env)), ml)
+    val score = scoreProbe(env, PipelineModel.load(model(env)), ml)
     ml.unpersist()
-    env.tracer.flush()
-    val reducer = pairsSpan.map { s =>
-      val stages = env.tracer.stagesIn(env.tracer.subtree(s.id))
-      stages.maxByOption(_.readRecords.sum)
-        .map(st => SparkSummary.maxOverMean(st.readRecords.toSeq)).getOrElse(0.0)
-    }.getOrElse(0.0)
-    // the first probe also keeps the query results for the DuckDB check
-    val keep = Option.when(!queriesKept)(env.dir("check"))
-    queriesKept = true
-    val queries = QuerySlice(spark, env, s"${env.data}/tables", keep)
-    blocking ++ files ++ score ++ queries ++ Map(
-      "triangle.pairs_s" -> pairsS, "triangle.pair_features_s" -> featS,
-      "triangle.join_back_s" -> (featS - pairsS),
-      "triangle.reducer_records_max_over_mean" -> reducer,
-      "planner.assign_s" -> assignS, "planner.heavy_blocks" -> heavy.size.toDouble,
-      "planner.replication_factor" -> DisDedupPlanner.getL(ki).toDouble,
-      "planner.replication_bound" -> math.sqrt(2.0 * ki))
+    val trainMl = DedupMl.toMlFrame(Cli.readPairs(spark, env.dir("setup/pairs_labeled")),
+      Febrl.featureCols).cache()
+    val (_, train) = probeTrain(env, trainMl, FebrlSkewed.SetupMaxIter)
+    trainMl.unpersist()
+    blocking ++ triangle ++ files ++ score ++ train ++ QuerySlice(spark, env)
   }
 
   def check(spark: SparkSession, env: Env): Seq[(String, Option[String])] = {
@@ -364,11 +384,13 @@ object QuerySlice {
         s"query.$name.exec_s" -> exec)
     } finally CachedFrames.drain()
 
-  /** Every query over the tables in `dir`; with `keep`, the results and
-    * their oracle SQL are written there for the DuckDB check. */
-  def apply(spark: SparkSession, env: Env, dir: String, keep: Option[String]): Map[String, Double] = {
-    val m = Names.flatMap(n => run(spark, env, dir, n, keep)).toMap
-    keep.foreach(out => Json.write(s"$out/oracle_sql.json",
+  /** Every query over the tables under the inputs. The first call of a
+    * run also writes the results and their oracle SQL to `check/` for the
+    * DuckDB check. */
+  def apply(spark: SparkSession, env: Env): Map[String, Double] = {
+    val keep = Some(env.dir("check")).filterNot(d => Files.exists(Paths.get(d)))
+    val m = Names.flatMap(n => run(spark, env, s"${env.data}/tables", n, keep)).toMap
+    keep.foreach(out => Main.writeJson(s"$out/oracle_sql.json",
       Names.map(n => n -> SparkEntry.oracleSql(n)).toMap))
     m
   }
